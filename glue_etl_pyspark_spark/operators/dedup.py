@@ -17,6 +17,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.text import shingles, tokenize_ws
+from .splits import repartition_for_compute
 
 
 def exact_dedup(
@@ -98,12 +99,15 @@ def ngram_jaccard_pairs(
         # as exact_dedup's sha2 keys, and still deterministic +
         # oracle-checked. Computed by the vectorized kernel
         # (bit-identical twin of the hashed_shingles expression path,
-        # pinned); repartition the raw (id, text) BEFORE the kernel: a
-        # small single-file input scans as 1-2 tasks, and anything
-        # computed pre-shuffle runs at that width.
+        # pinned) on one partition per core: a small single-file input
+        # scans as 1-2 tasks, and a count-less repartition(id) is
+        # coalesced by AQE to the same few tasks (a ~4 MB shuffle ran
+        # the kernel as 3 tasks on 4 cores).
         hashed_shingles_kernel(
-            df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text"))
-            .repartition(F.col("id")),
+            repartition_for_compute(
+                df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")),
+                "id",
+            ),
             "id",
             "__text",
             n,
@@ -184,9 +188,9 @@ def hashed_shingles_kernel(
     ``array_distinct(hashed_shingles(token_hashes(tokenize_ws(text)), n))``
     — emits (id, sh array<bigint>), bit-identical to the expression
     path INCLUDING element order (array_distinct keeps first
-    occurrence; so does the kernel's unique pass). Equality-pinned
-    over every fixture doc + tokenization edge cases in
-    tests/test_llm_ops.py.
+    occurrence; so does the kernel's duplicated() pass). Equality-
+    pinned over every fixture doc + tokenization and batch edge cases
+    in tests/test_llm_ops.py.
 
     Why it's exact: xxHash64(seed=42) is replicated verbatim on the
     token's UTF-8 bytes (per-string-value pinned vs F.xxhash64 in the
@@ -194,16 +198,15 @@ def hashed_shingles_kernel(
     the rotate-xor fold is uint64 math identical to
     ``_rotl64(a,k)^b``.
 
-    Why it's (only modestly, ~1.2x at n=4) faster: each UNIQUE token
-    is hashed once per partition and cached, and the n-1 fold passes
-    are vectorized numpy shifts instead of interpreted zip_with
-    element-ops. The expression path was already cheap (xxhash64 +3
-    zip_with passes ≈ 4 element-ops/token, vs simhash's 64-wide fold
-    where the same rework bought 3x), so most of the stage is scan +
-    tokenize, which both paths pay. The kernel's edge grows with n
-    (fold passes scale with n-1; the cache amortizes token hashing
-    across the corpus' Zipf head) — measured sf0.1 n=4 shingle stage:
-    1.15 s -> 0.92 s."""
+    Why it's fast: each Arrow batch is ONE flat token array. Tokens
+    are factorized and only the distinct ones hashed (and cached
+    across the partition's batches); the n-1 fold passes run once
+    over the flat array, windows that cross a doc boundary are
+    dropped, and one hashed pass over (doc, hash) keeps the first
+    occurrences. No Python work per token remains beyond the split.
+    Measured on the benchmark's 20k-doc corpus (1.1M tokens, n=4, one
+    core of a 4-vCPU VM, median of 3): 1.60 s of kernel CPU with the
+    per-doc loop, 0.65 s batch-vectorized."""
     # derive the id type from the input: callers pass string/int ids
     # through ngram_jaccard_pairs, and a hardcoded `long` makes Arrow
     # conversion fail for them (ADVICE r8)
@@ -212,6 +215,7 @@ def hashed_shingles_kernel(
 
     def gen(batches):
         import re
+        from itertools import chain
 
         import numpy as np
         import pandas as pd
@@ -263,7 +267,8 @@ def hashed_shingles_kernel(
             h ^= h >> 32
             return h
 
-        ws = re.compile("[ \t\n\x0b\f\r]+")
+        ws_chars = " \t\n\x0b\f\r"
+        ws = re.compile(f"[{ws_chars}]+")
         cache: dict[str, int] = {}
 
         def tok_hash(t: str) -> int:
@@ -273,30 +278,45 @@ def hashed_shingles_kernel(
                 cache[t] = v
             return v
 
-        empty = np.empty(0, dtype=np.int64)
+        def tokens(text: str) -> list[str]:
+            # strip first: the `+` run then leaves no empty token
+            s = text.lower().strip(ws_chars)
+            return ws.split(s) if s else []
+
+        rot = [np.uint64((17 * j) % 63 + 1) for j in range(1, n)]
         for pdf in batches:
-            out = []
-            for text in pdf[text_col]:
-                if text is None:
-                    # expression path yields NULL through the whole
-                    # tree on NULL text; size(NULL) drops it the same
-                    # way size([]) < 1 drops the empty array
-                    out.append(None)
-                    continue
-                toks = [t for t in ws.split(text.lower()) if t]
-                m = len(toks) - n + 1
-                if m <= 0:
-                    out.append(empty)
-                    continue
-                h = np.fromiter(
-                    (tok_hash(t) for t in toks), dtype=np.uint64, count=len(toks)
-                )
-                acc = h[:m].copy()
-                for j in range(1, n):
-                    k = np.uint64((17 * j) % 63 + 1)
-                    acc = ((acc << k) | (acc >> np.uint64(64 - k))) ^ h[j : m + j]
-                _, idx = np.unique(acc, return_index=True)
-                out.append(acc[np.sort(idx)].astype(np.int64))
+            texts = pdf[text_col]
+            # expression path yields NULL through the whole tree on
+            # NULL text; size(NULL) drops it the same way size([]) < 1
+            # drops the empty array
+            live = texts.notna().to_numpy()
+            docs = [tokens(t) for t in texts[live]]
+            lens = np.fromiter(map(len, docs), dtype=np.int64, count=len(docs))
+            ends = np.cumsum(lens)
+            # the batch as ONE flat token array: hash each distinct
+            # token once, gather the hashes back by code
+            codes, uniq = pd.factorize(
+                np.fromiter(chain.from_iterable(docs), dtype=object, count=int(lens.sum()))
+            )
+            uh = np.fromiter(map(tok_hash, uniq), dtype=np.uint64, count=len(uniq))
+            h = uh[codes]
+            m = max(len(h) - n + 1, 0)
+            acc = h[:m].copy()
+            for j, k in enumerate(rot, 1):
+                acc = ((acc << k) | (acc >> (np.uint64(64) - k))) ^ h[j : m + j]
+            # drop the windows that run past their doc's last token
+            doc = np.repeat(np.arange(len(docs)), lens)[:m]
+            ok = np.arange(n, m + n) <= ends[doc]
+            doc, acc = doc[ok], acc[ok]
+            # array_distinct keeps the first occurrence of each
+            # (doc, hash), in token order
+            keep = ~pd.DataFrame({"d": doc, "h": acc}).duplicated().to_numpy()
+            sh = acc[keep].view(np.int64)
+            cuts = np.concatenate(([0], np.cumsum(np.bincount(doc[keep], minlength=len(docs)))))
+            arrays = [sh[lo:hi] for lo, hi in zip(cuts[:-1], cuts[1:])]
+            out = [None] * len(pdf)
+            for i, arr in zip(np.flatnonzero(live), arrays):
+                out[i] = arr
             yield pd.DataFrame({id_col: pdf[id_col].values, "sh": out})
 
     return df.select(id_col, text_col).mapInPandas(gen, spark_schema)
@@ -421,7 +441,11 @@ def simhash_pairs(
     # sf0.1: 23.8 s (expression, computed twice) -> 10.4 s (expression,
     # once) -> see SCALING.md for the kernel number.
     sh = (
-        simhash_bits_kernel(df.select(F.col(id_col).alias("id"), text_col), "id", text_col)
+        simhash_bits_kernel(
+            repartition_for_compute(df.select(F.col(id_col).alias("id"), text_col), "id"),
+            "id",
+            text_col,
+        )
         .select("id", "sh64")
         .localCheckpoint(eager=True)
     )
@@ -473,16 +497,18 @@ def minhash_lsh_pairs(
     from pyspark import StorageLevel
     from pyspark.ml.feature import HashingTF, MinHashLSH
 
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        shingles(tokenize_ws(text_col), n).alias("sh"),
-    ).filter(F.size("sh") > 0)
+    sh = repartition_for_compute(
+        df.select(F.col(id_col).alias("id"), F.col(text_col).alias("__text")), "id"
+    ).select("id", shingles(tokenize_ws("__text"), n).alias("sh"))
     tf = HashingTF(inputCol="sh", outputCol="features", numFeatures=num_features, binary=True)
     # approxSimilarityJoin(feats, feats) plans the tokenize + shingle +
     # HashingTF subtree TWICE (self-join); persist makes the transform
     # physical once (r16: interleaved sf0.1 A/B min 10.90 -> 6.76 s,
     # median 14.60 -> 10.53 s, identical 6024 pairs).
-    feats = tf.transform(sh).persist(StorageLevel.MEMORY_AND_DISK)
+    cached = tf.transform(sh).persist(StorageLevel.MEMORY_AND_DISK)
+    # filter ABOVE the cache: below it Catalyst pushes the filter, with
+    # the shingle expression inlined, under the exchange into the scan
+    feats = cached.filter(F.size("sh") > 0)
     try:
         lsh = MinHashLSH(
             inputCol="features", outputCol="hashes", numHashTables=num_hash_tables, seed=seed
@@ -506,7 +532,7 @@ def minhash_lsh_pairs(
         # work still happens inside the caller's timed region.
         return out.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
     finally:
-        feats.unpersist()
+        cached.unpersist()
 
 
 def dedup_clusters(

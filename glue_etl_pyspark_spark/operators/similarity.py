@@ -3,8 +3,9 @@
 Three tiers, correctness-anchored:
 
 - ``knn_bruteforce`` — exact top-k cosine. The cross join is bounded
-  by the (small, broadcast) query side; the corpus side streams. This
-  is the sf≤0.1 correctness anchor and the rerank kernel.
+  by the (small, broadcast) query side; the corpus side streams,
+  spread over one partition per core. This is the sf≤0.1
+  correctness anchor and the rerank kernel.
 - ``ivf_knn`` — IVF-style two-level search: deterministic coarse
   centroids, cluster assignment, probe the nprobe nearest clusters,
   exact rerank inside. Same answer as brute force when recall holds;
@@ -24,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from ..functions.vectors import cosine_similarity, dot, l2_norm, l2_normalize
+from .splits import repartition_for_compute
 
 
 def knn_bruteforce(
@@ -41,8 +43,12 @@ def knn_bruteforce(
     Emits (query_id, neighbor_id, cos_sim, rn). Self-matches (same
     id) are excluded; ties break on neighbor_id. The query side is
     broadcast — callers must keep it small (the documented bound for
-    the cross join); the corpus side never shuffles until the final
-    per-query top-k, which carries only k rows per query partition.
+    the cross join). The corpus side shuffles once before the join,
+    hash-partitioned on its id into one partition per core: a corpus
+    of a few MB scans as a single split, which would run the whole
+    scoring stage (nq dots per corpus row) as one task. After the
+    join only the per-query top-k shuffles, k rows per query and
+    partition.
     """
     # Cosine tree = dot(raw)/(na*nb) with each side's norm materialized
     # ONCE pre-join (zero-norm -> NULL, matching cosine_similarity's
@@ -58,11 +64,10 @@ def knn_bruteforce(
         F.col(query_vec).alias("__qv"),
         l2_norm(query_vec).alias("__qn"),
     )
-    c = corpus.select(
-        F.col(corpus_id).alias("neighbor_id"),
-        F.col(corpus_vec).alias("__cv"),
-        l2_norm(corpus_vec).alias("__cn"),
-    )
+    c = repartition_for_compute(
+        corpus.select(F.col(corpus_id).alias("neighbor_id"), F.col(corpus_vec).alias("__cv")),
+        "neighbor_id",
+    ).withColumn("__cn", l2_norm("__cv"))
     sims = (
         c.crossJoin(broadcast(q))
         .filter(F.col("query_id") != F.col("neighbor_id"))

@@ -1,4 +1,5 @@
-"""Row/column splitting + sampling operators (SURVEY.md §2.3, §2.8).
+"""Row/column splitting + sampling operators (SURVEY.md §2.3, §2.8),
+and the compute-sized exchange in front of heavy per-row kernels.
 
 Glue equivalents: SplitFields, SplitRows, Spigot.
 """
@@ -38,3 +39,16 @@ def spigot(df: DataFrame, path: str, fraction: float = 0.01, seed: int = 42) -> 
     no collect, no extra shuffle."""
     df.sample(fraction=fraction, seed=seed).write.mode("overwrite").json(path)
     return df
+
+
+def repartition_for_compute(df: DataFrame, *cols: str | Column) -> DataFrame:
+    """Hash-repartition to one partition per core, for a stage whose
+    cost is per-row compute (a Python kernel, a cross-join scoring
+    pass), not bytes.
+
+    Scan splits and AQE coalescing both size partitions by BYTES, so a
+    few MB of input lands on 1-3 tasks. A count-less
+    ``repartition(col)`` does not help: AQE coalesces it by bytes too.
+    An explicit count makes the exchange REPARTITION_BY_NUM, which AQE
+    never coalesces."""
+    return df.repartition(df.sparkSession.sparkContext.defaultParallelism, *cols)

@@ -19,6 +19,7 @@ from ..operators.dedup import (
     ngram_jaccard_pairs,
     simhash_pairs,
 )
+from ..operators.splits import repartition_for_compute
 from ..registry import query
 
 _DUCK_TOKS = "list_filter(string_split_regex(lower(text), '\\s+'), t -> t <> '')"
@@ -559,11 +560,14 @@ def dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     corpus = _with_perturbed_copies(spark, sf_dir)
     sh = (
-        corpus.select(F.col("doc_id").alias("id"), F.col("text").alias("__text"))
-        .repartition(F.col("id"))
+        repartition_for_compute(
+            corpus.select(F.col("doc_id").alias("id"), F.col("text").alias("__text")), "id"
+        )
         .withColumn("__th", token_hashes(tokenize_ws("__text")))
         .select("id", F.array_distinct(hashed_shingles("__th", 4)).alias("sh"))
-        .filter(F.size("sh") > 0)
+        # no size(sh) > 0 filter: explode below drops empty arrays
+        # anyway, and Catalyst would push the filter, with the whole
+        # shingle expression inlined, under the exchange into the scan
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     inv = sh.select("id", F.explode("sh").alias("shingle"))

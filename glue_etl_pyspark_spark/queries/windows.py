@@ -223,20 +223,24 @@ def events_rolling_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-type window as a genuinely different evaluation. ~4 % row
     replication buys types x days parallelism."""
     ev = load_table(spark, sf_dir, "events")
-    # ntz won't cast straight to long; to_unix_timestamp under the UTC
-    # session matches DuckDB's epoch() on the same ntz values
+    # ntz won't cast straight to long; unix_seconds of the ntz value
+    # cast under the UTC session FLOORS like the oracle's
+    # floor(epoch(ts)) (to_unix_timestamp truncates toward zero, one
+    # second off for fractional pre-1970 times)
     base = ev.select(
         "event_id",
         "event_type",
         "value",
-        F.expr("to_unix_timestamp(ts)").alias("sec"),
+        F.expr("unix_seconds(cast(ts as timestamp))").alias("sec"),
     )
-    home = base.withColumn("blk", F.expr(f"sec div {_ROLL_BLOCK}")).withColumn(
-        "ctx", F.lit(False)
-    )
+    # floor-division block and pmod offset: `div` and `%` truncate
+    # toward zero, which puts pre-1970 (negative) seconds in the wrong
+    # block and never spills them forward
+    blk = F.expr(f"(sec - pmod(sec, {_ROLL_BLOCK})) div {_ROLL_BLOCK}")
+    home = base.withColumn("blk", blk).withColumn("ctx", F.lit(False))
     spill = (
-        base.filter(F.col("sec") % _ROLL_BLOCK >= _ROLL_BLOCK - 3600)
-        .withColumn("blk", F.expr(f"sec div {_ROLL_BLOCK}") + 1)
+        base.filter(F.expr(f"pmod(sec, {_ROLL_BLOCK})") >= _ROLL_BLOCK - 3600)
+        .withColumn("blk", blk + 1)
         .withColumn("ctx", F.lit(True))
     )
     u = home.unionByName(spill)

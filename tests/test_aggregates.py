@@ -67,3 +67,43 @@ def test_r17_events_width_determinism(spark, sf_dir):
         assert runs[n][0] and all(r == runs[n][0] for r in runs[n][1:]), (
             f"{n} varies with shuffle width"
         )
+
+
+def test_rolling_hourly_pre_1970_matches_oracle(spark, tmp_path):
+    """events_rolling_hourly on negative epochs: rows within an hour
+    of a negative day-block boundary, and fractional pre-1970 seconds
+    (-1.25 s floors to -2, not -1) next to a row exactly 3600 s
+    later. Truncating `div`/`%` blocks and to_unix_timestamp seconds
+    (both round toward zero) miscounted several of these rows."""
+    import duckdb
+    import numpy as np
+    import pandas as pd
+
+    from glue_etl_pyspark_spark.queries.windows import ROLLING_HOURLY_ORACLE
+    from glue_etl_pyspark_spark.registry import load_all
+
+    day = 86400
+    secs = [
+        -1.25, 3599.0, -day - 3600.5, -day - 0.25,
+        -2 * day - 10, -day - 3000, -day - 1, -day, -day + 5, -day + 1800,
+        -3599.5, 0, 0.5, 3600, -2 * day + 200, -day - 3599,
+    ]
+    n = len(secs)
+    d = tmp_path / "ev"
+    d.mkdir()
+    pd.DataFrame({
+        "event_id": np.arange(n, dtype=np.int64),
+        "ts": pd.to_datetime([round(s * 1e6) for s in secs], unit="us"),
+        "user_id": np.zeros(n, dtype=np.int64),
+        "event_type": ["click"] * (n - 2) + ["view"] * 2,
+        "value": np.arange(n, dtype=np.float64) + 0.25,
+        "props": [""] * n,
+    }).to_parquet(d / "events.parquet", coerce_timestamps="us")
+
+    got = sorted(tuple(r) for r in load_all()["events_rolling_hourly"].fn(spark, str(d)).collect())
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW events AS SELECT * FROM read_parquet('{d}/events.parquet')")
+    want = sorted(tuple(r) for r in con.execute(ROLLING_HOURLY_ORACLE).fetchall())
+    con.close()
+    assert len(got) == n
+    assert got == want, [(g, w) for g, w in zip(got, want) if g != w]

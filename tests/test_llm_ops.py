@@ -27,6 +27,36 @@ def test_minhash_lsh_recall_vs_exact(spark, sf_dir):
     assert recall >= 0.9, f"MinHash-LSH recall {recall:.2f} < 0.9"
 
 
+def _pairs_digest(pairs: list[tuple[int, int]]) -> str:
+    import hashlib
+
+    return hashlib.sha256(repr(pairs).encode()).hexdigest()
+
+
+def _assert_pinned_pairs(pairs: list[tuple[int, int]], digest: str, pinned_file: str) -> None:
+    """``pairs`` (sorted) must hash to ``digest``. On a mismatch, fail
+    with the first few pairs on each side of the difference against
+    the pinned set in tests/data/``pinned_file`` (whose own digest is
+    checked, so the file cannot drift from the pin)."""
+    import gzip
+    import os
+
+    got = _pairs_digest(pairs)
+    if got == digest:
+        return
+    path = os.path.join(os.path.dirname(__file__), "data", pinned_file)
+    with gzip.open(path, "rt") as f:
+        pinned = [tuple(int(v) for v in line.split()) for line in f]
+    assert _pairs_digest(pinned) == digest, f"{pinned_file} does not hash to the pin"
+    lost = sorted(set(pinned) - set(pairs))
+    new = sorted(set(pairs) - set(pinned))
+    pytest.fail(
+        f"pair set moved: {len(pairs)} pairs (pinned {len(pinned)}), digest {got}; "
+        f"{len(lost)} pinned pairs missing, first {lost[:5]}; "
+        f"{len(new)} pairs not pinned, first {new[:5]}"
+    )
+
+
 def test_minhash_lsh_pinned_pairs_sf01(spark):
     """r17 (VERDICT r16 item 7): dedup_minhash_lsh sits in the
     no-oracle class, so its r16 persist rework (and any future plan
@@ -36,17 +66,15 @@ def test_minhash_lsh_pinned_pairs_sf01(spark):
     partitioning-independent value, so the digest is stable across
     widths/machines (the r16 A/B observed the identical 6024 pairs
     across all variants)."""
-    import hashlib
-
     rows = (
         load_all()["dedup_minhash_lsh"].fn(spark, "/root/testdata/sf0.1").collect()
     )
     pairs = sorted((int(r.id_a), int(r.id_b)) for r in rows)
-    assert len(pairs) == 6024, f"candidate count moved: {len(pairs)}"
-    digest = hashlib.sha256(repr(pairs).encode()).hexdigest()
-    assert digest == (
-        "087fe75cfab9531d1147edecf627739034d60e806ad11d7704d427ec3a512dd3"
-    ), f"seeded candidate set moved: {digest}"
+    _assert_pinned_pairs(
+        pairs,
+        "087fe75cfab9531d1147edecf627739034d60e806ad11d7704d427ec3a512dd3",
+        "minhash_lsh_pairs_sf01.txt.gz",
+    )
 
 
 def test_simhash_pairs_recover_planted_twins(spark, sf_dir):
@@ -637,6 +665,26 @@ def test_grouped_prefix_sum_repeated_run_determinism(spark, sf_dir):
     assert all(r == runs[0] for r in runs[1:])
 
 
+def test_compute_sized_ops_width_determinism(spark, sf_dir):
+    """The ops whose kernel or scoring input goes through
+    repartition_for_compute (a fixed core-count exchange) must give
+    identical rows at shuffle widths 2/32/200 for the shuffles that
+    follow it."""
+    names = ("dedup_ngram_jaccard", "dedup_containment", "dedup_simhash_pairs",
+             "knn_bruteforce_cosine")
+    runs: dict[str, list] = {n: [] for n in names}
+    orig = spark.conf.get("spark.sql.shuffle.partitions")
+    try:
+        for parts in ("2", "32", "200"):
+            spark.conf.set("spark.sql.shuffle.partitions", parts)
+            for n in names:
+                runs[n].append(sorted(map(tuple, _run(spark, sf_dir, n).collect())))
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", orig)
+    for n in names:
+        assert runs[n][0] and all(r == runs[n][0] for r in runs[n][1:]), n
+
+
 def test_pq_adc_recall_floor_and_structure(spark, sf_dir):
     """PQ-ADC on structureless vectors: recall@5 is inherently low
     (measured 0.17 at sf0.01 / 0.09 at sf0.1 — see the query
@@ -855,6 +903,54 @@ def test_shingle_kernel_is_bitexact_twin(spark, sf_dir):
     null_df = spark.createDataFrame([(99, None)], "doc_id long, text string")
     rows = hashed_shingles_kernel(null_df, "doc_id", "text", 3).collect()
     assert len(rows) == 1 and rows[0]["sh"] is None
+
+
+def test_shingle_kernel_batch_edges(spark):
+    """The kernel folds each Arrow batch as ONE flat token array, so
+    pin the batch-level edges against the expression path (values,
+    order and NULLs): adjacent docs each shorter than n (no shingle
+    may span a doc boundary), an all-NULL batch, NULL text between
+    short docs, and repeated shingles inside a doc (first-occurrence
+    order, not sorted)."""
+    from glue_etl_pyspark_spark.functions.text import (
+        hashed_shingles,
+        token_hashes,
+        tokenize_ws,
+    )
+    from glue_etl_pyspark_spark.operators.dedup import hashed_shingles_kernel
+
+    def both(texts, n):
+        # one partition: every row lands in the same Arrow batch
+        df = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string").coalesce(1)
+        want = {
+            r.doc_id: r.sh
+            for r in df.select(
+                "doc_id",
+                F.array_distinct(hashed_shingles(token_hashes(tokenize_ws("text")), n)).alias("sh"),
+            ).collect()
+        }
+        got = {r.doc_id: r.sh for r in hashed_shingles_kernel(df, "doc_id", "text", n).collect()}
+        return got, want
+
+    got, want = both(["a b", "c d", "e", "f g", "h"], 3)
+    assert got == want == {i: [] for i in range(5)}
+
+    got, want = both([None, None, None], 2)
+    assert got == want == {0: None, 1: None, 2: None}
+
+    got, want = both([None, "a b", None, "a b c d", "x", None], 3)
+    assert got == want
+    assert [i for i, v in got.items() if v is None] == [0, 2, 5]
+    assert [len(got[i]) for i in (1, 3, 4)] == [0, 2, 0]
+
+    texts = ["a b c a b c a b", "z y z y z y"]
+    got, want = both(texts, 2)
+    assert got == want
+    # first occurrences are the leading windows: ab bc ca / zy yz
+    raw = spark.createDataFrame([(t,) for t in texts], "text string").select(
+        hashed_shingles(token_hashes(tokenize_ws("text")), 2).alias("sh")
+    ).collect()
+    assert [got[0], got[1]] == [raw[0].sh[:3], raw[1].sh[:2]]
 
 
 def test_kernels_accept_non_long_ids(spark):

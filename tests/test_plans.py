@@ -120,6 +120,50 @@ def test_knn_bruteforce_broadcasts_query_side(spark, sf_dir):
     assert "SortMergeJoin" not in plan
 
 
+def _exchange_below(plan: str, operator: str) -> str:
+    """The first Exchange line under the first ``operator`` line of a
+    simple (tree) explain."""
+    lines = plan.splitlines()
+    start = next(i for i, line in enumerate(lines) if operator in line)
+    return next(line for line in lines[start + 1 :] if "Exchange" in line)
+
+
+def test_kernel_inputs_are_sized_by_cores(spark, sf_dir):
+    """The shingle kernel and the knn corpus side each sit on a
+    hash exchange with an explicit count of one partition per core
+    (REPARTITION_BY_NUM, which AQE never coalesces). A count-less
+    repartition(id) let AQE shrink a ~4 MB shuffle to 3 tasks on 4
+    cores; a bare corpus scan was a single task."""
+    import re
+
+    cores = spark.sparkContext.defaultParallelism
+
+    dedup = explain_str(_df(spark, sf_dir, "dedup_ngram_jaccard"), mode="simple")
+    ex = _exchange_below(dedup, "MapInPandas")
+    m = re.search(r"Exchange hashpartitioning\(id#\d+L?, (\d+)\), REPARTITION_BY_NUM", ex)
+    assert m and int(m.group(1)) == cores, ex
+
+    knn = explain_str(_df(spark, sf_dir, "knn_bruteforce_cosine"), mode="simple")
+    ex = _exchange_below(knn, "BroadcastNestedLoopJoin")
+    m = re.search(
+        r"Exchange hashpartitioning\(neighbor_id#\d+L?, (\d+)\), REPARTITION_BY_NUM", ex
+    )
+    assert m and int(m.group(1)) == cores, ex
+
+
+def test_compute_repartition_survives_aqe(spark):
+    """At run time the explicit-count exchange keeps every partition
+    of a tiny input, where a count-less repartition(col) is coalesced
+    by bytes (the trap repartition_for_compute exists for)."""
+    from glue_etl_pyspark_spark.operators.splits import repartition_for_compute
+
+    cores = spark.sparkContext.defaultParallelism
+    df = spark.range(1000)
+    assert repartition_for_compute(df, "id").rdd.getNumPartitions() == cores
+    # AQE coalesces the count-less exchange to a single partition
+    assert df.repartition("id").rdd.getNumPartitions() == 1
+
+
 def test_ngram_dedup_count_verify_no_array_rejoin(spark, sf_dir):
     """Complete-index path: |A∩B| comes from the pair-count aggregate
     (map-side combine), so the plan must contain partial+final
